@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..expr import translate
-from ..metrics import DoubleMetric, Entity
+from ..metrics import Entity
 from ..states import (
     CorrelationState,
     DataTypeHistogramState,
@@ -204,7 +204,7 @@ class StandardDeviation(ScanShareableAnalyzer):
         return StandardDeviationState(n, avg, var * n)
 
 
-class Quantile(ScanShareableAnalyzer):
+class Quantile(Analyzer):
     """Exact quantile with pandas ``interpolation='nearest'`` semantics
     (returns an actual data value; reference ``hooqu/analyzers/quantile.py``).
 
@@ -214,6 +214,8 @@ class Quantile(ScanShareableAnalyzer):
     — an integral rank, so Spark's linear interpolation degenerates to
     exact element selection.  Spark's exact ``percentile`` buffers
     values per group; for 100TB-scale use ``ApproxQuantile`` instead.
+    Its state needs a second pass, so it is not scan-shareable: fold and
+    commit paths take ``QuantileSketch``/``ApproxQuantile`` instead.
     """
 
     def __init__(self, column: str, quantile: float, where: Optional[str] = None):
@@ -275,12 +277,6 @@ class Quantile(ScanShareableAnalyzer):
         return QuantileState(_f(value))
 
     # -- standalone path -----------------------------------------------------
-    def aggregation_exprs(self, df: DataFrame) -> List[Column]:
-        return self.phase1_exprs(df)
-
-    def state_from_agg(self, values: Sequence) -> Optional[State]:
-        raise NotImplementedError("Quantile uses the two-phase protocol")
-
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
         self._validate()
         n = int(

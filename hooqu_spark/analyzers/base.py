@@ -5,8 +5,11 @@ execution in ``hooqu/analyzers/analyzer.py:249-261``):
 
 * Preconditions run driver-side against ``df.schema`` — zero Spark jobs.
 * Every scan-shareable analyzer contributes *Catalyst aggregate
-  expressions*; the runner fuses all of them into ONE ``df.agg(...)``
-  job (partial/final hash aggregation, whole-stage codegen).  Analyzers
+  expressions*; ``FusedScan`` fuses all of them into ONE ``df.agg(...)``
+  job (partial/final hash aggregation, whole-stage codegen) and slices
+  the result row back into per-analyzer monoid states.  Every path that
+  turns analyzers into states (runner, profiler, lineage, streaming)
+  goes through it.  Analyzers
   with different ``where`` filters fuse via conditional ``F.when``
   aggregates instead of pre-filtering, so one scan serves them all —
   the design the reference's own TODO points at
@@ -23,7 +26,7 @@ import threading
 import traceback
 from abc import ABC, abstractmethod
 from collections import OrderedDict
-from typing import Callable, List, Optional, Sequence
+from typing import Callable, Dict, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -316,9 +319,12 @@ class Analyzer(ABC):
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
         """Run this analyzer standalone (one Spark job)."""
 
-    @abstractmethod
     def compute_metric_from(self, state: Optional[State]) -> DoubleMetric:
-        ...
+        if state is not None:
+            return metric_from_value(
+                state.metric_value(), self.name, self.instance, self.entity
+            )
+        return metric_from_empty(self, self.name, self.instance, self.entity)
 
     def calculate(self, data: DataFrame) -> DoubleMetric:
         """Precondition check -> state -> metric, errors becoming
@@ -337,13 +343,14 @@ class Analyzer(ABC):
 
 class ScanShareableAnalyzer(Analyzer):
     """Analyzer whose work is a set of aggregate expressions over one
-    scan; the runner fuses these across analyzers into a single job."""
+    scan; ``FusedScan`` fuses these across analyzers into a single job."""
 
     @property
     def fuses_into_scan(self) -> bool:
         """False when this instance must run standalone (e.g. CustomSql
         with ``where``, whose black-box aggregate cannot be gated with
-        conditional aggregation); the runner then uses ``calculate``."""
+        conditional aggregation); the runner then uses ``calculate``
+        and fold/commit paths reject it (``fusable``)."""
         return True
 
     @abstractmethod
@@ -361,12 +368,12 @@ class ScanShareableAnalyzer(Analyzer):
         buckets share an expensive classification (e.g. regex chains)
         computes it once here; ``aggregation_exprs`` then references
         the named column when present and falls back to the inline
-        expression otherwise (lineage/streaming paths)."""
+        expression otherwise."""
         return {}
 
     def cached_aggregation_exprs(self, df: DataFrame) -> List[Column]:
         """``aggregation_exprs`` through the driver-side expression
-        cache (see module comment).  All fused runners go through this;
+        cache (see module comment).  ``FusedScan`` goes through this;
         override ``aggregation_exprs`` as usual — subclasses whose
         expressions depend on anything beyond (identity, df.schema)
         must not exist (that is the ``aggregation_exprs`` contract)."""
@@ -386,19 +393,10 @@ class ScanShareableAnalyzer(Analyzer):
         return cols
 
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
-        data = apply_projections(data, [self])
-        exprs = self.aggregation_exprs(data)
-        row = data.agg(
-            *(e.alias(f"_h{i}") for i, e in enumerate(exprs))
-        ).first()
-        return self.state_from_agg(list(row))
-
-    def compute_metric_from(self, state: Optional[State]) -> DoubleMetric:
-        if state is not None:
-            return metric_from_value(
-                state.metric_value(), self.name, self.instance, self.entity
-            )
-        return metric_from_empty(self, self.name, self.instance, self.entity)
+        states, errors = FusedScan(data, [self]).run()
+        if self in errors:
+            raise errors[self]
+        return states[self]
 
 
 def apply_projections(
@@ -414,3 +412,120 @@ def apply_projections(
     if not proj:
         return df
     return df.select("*", *(c.alias(n) for n, c in proj.items()))
+
+
+# ---------------------------------------------------------------------------
+# The fused scan — the one place analyzers become states
+# ---------------------------------------------------------------------------
+
+def fusable(a: Analyzer) -> bool:
+    """The one admission rule: only an analyzer whose state comes from
+    its slice of one fused aggregation joins ``FusedScan`` (and so can
+    be merged across buckets, batches or windows)."""
+    return isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan
+
+
+def check_fusable(analyzers: Sequence[Analyzer]) -> None:
+    """``fusable`` for every path that folds or commits states; wrong
+    analyzer types are a programming error, so they raise."""
+    for a in analyzers:
+        if not fusable(a):
+            raise TypeError(
+                f"{a!r} does not fuse into one scan, so its state cannot be"
+                " folded or committed; use QuantileSketch or ApproxQuantile"
+                " for quantiles, and CustomSql without `where`"
+            )
+
+
+class FusedScan:
+    """Project -> ONE aggregation -> slice the row into states.
+
+    Checks every analyzer's preconditions against ``df.schema``, applies
+    the shared projections, and collects each analyzer's aggregate
+    expressions with its slice offsets — all driver-side, no job.
+    Schema and expression errors are recorded per analyzer in
+    ``errors`` (the analyzer then contributes no expressions) instead of
+    failing the whole job; so are errors building a state from its
+    slice (``states``).  Callers turn them into ``Failure`` metrics that
+    keep the cause (``metrics_from``), or raise them (commit paths).
+
+    ``agg(*group_cols)`` is the lazy, unaliased aggregation (positional
+    consumption: each ``.alias()`` is a py4j round trip); grouped rows
+    carry the group columns first.  ``states(values)`` slices one row's
+    expression values.  ``run()`` is the ungrouped one-job shorthand.
+    """
+
+    def __init__(self, df: DataFrame, analyzers: Sequence[Analyzer]):
+        check_fusable(analyzers)
+        self.analyzers: List[ScanShareableAnalyzer] = list(dict.fromkeys(analyzers))
+        self.errors: Dict[Analyzer, Exception] = {}
+        schema = df.schema
+        passed = []
+        for a in self.analyzers:
+            err = find_first_failing(schema, a.preconditions())
+            if err is not None:
+                self.errors[a] = err
+            else:
+                passed.append(a)
+        self.df = apply_projections(df, passed)
+        self.exprs: List[Column] = []
+        self._slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
+        for a in passed:
+            try:
+                ae = a.cached_aggregation_exprs(self.df)
+            except Exception as e:  # noqa: BLE001 - unresolvable expression
+                self.errors[a] = e
+                continue
+            self._slices.append((a, len(self.exprs), len(self.exprs) + len(ae)))
+            self.exprs.extend(ae)
+
+    def agg(self, *group_cols: Column) -> DataFrame:
+        # a literal keeps the grouped shape valid when nothing fuses
+        exprs = self.exprs or [F.lit(None)]
+        if group_cols:
+            return self.df.groupBy(*group_cols).agg(*exprs)
+        return self.df.agg(*exprs)
+
+    def states(
+        self, values: Sequence
+    ) -> Tuple[Dict[Analyzer, Optional[State]], Dict[Analyzer, Exception]]:
+        states: Dict[Analyzer, Optional[State]] = {}
+        errors = dict(self.errors)
+        for a, start, end in self._slices:
+            try:
+                states[a] = a.state_from_agg(values[start:end])
+            except Exception as e:  # noqa: BLE001 - e.g. stddev with n = 0
+                errors[a] = e
+        return states, errors
+
+    def run(
+        self,
+    ) -> Tuple[Dict[Analyzer, Optional[State]], Dict[Analyzer, Exception]]:
+        return self.states(list(self.agg().first()) if self.exprs else [])
+
+
+def merge_state(prev: Optional[State], new: Optional[State]) -> Optional[State]:
+    """One monoid fold step; ``None`` (no state) is the identity."""
+    if prev is None:
+        return new
+    return prev if new is None else prev.sum(new)
+
+
+def metrics_from(
+    analyzers: Sequence[Analyzer],
+    states: Mapping[Analyzer, Optional[State]],
+    errors: Mapping[Analyzer, Exception],
+) -> Dict[Analyzer, DoubleMetric]:
+    """State -> metric per analyzer; with no state, the recorded cause
+    (if any) becomes the ``Failure``."""
+    out: Dict[Analyzer, DoubleMetric] = {}
+    for a in analyzers:
+        state = states.get(a)
+        if state is None and a in errors:
+            out[a] = a.to_failure_metric(errors[a])
+            continue
+        try:
+            out[a] = a.compute_metric_from(state)
+        except Exception as e:  # noqa: BLE001
+            out[a] = a.to_failure_metric(e)
+    return out

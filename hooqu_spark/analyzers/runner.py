@@ -24,20 +24,46 @@ Precondition failures and unresolvable expressions become per-analyzer
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..metrics import DoubleMetric, Entity, Metric
+from ..metrics import Entity, Metric
 from .analyzers import Quantile
 from .base import (
     Analyzer,
+    FusedScan,
     ScanShareableAnalyzer,
-    apply_projections,
     find_first_failing,
+    fusable,
+    metrics_from,
 )
 from .grouping import FrequencyBasedAnalyzer
+
+
+class _QuantileCount(ScanShareableAnalyzer):
+    """Phase 1 of an exact ``Quantile`` — its non-NULL count — riding
+    in the fused scan; the state is the count itself."""
+
+    def __init__(self, q: Quantile):
+        super().__init__("QuantileCount", q.instance, Entity.COLUMN, q.where)
+        self.q = q
+
+    def _identity(self) -> tuple:
+        # phase1_exprs validates the quantile, and the expression cache
+        # is keyed by identity: counts for different quantiles must not
+        # be shared
+        return super()._identity() + (self.q.quantile,)
+
+    def preconditions(self):
+        return self.q.preconditions()
+
+    def aggregation_exprs(self, df: DataFrame):
+        return self.q.phase1_exprs(df)
+
+    def state_from_agg(self, values: Sequence) -> int:
+        return int(values[0] or 0)
 
 
 @dataclass
@@ -96,100 +122,58 @@ def do_analysis_run(
 
     metrics: Dict[Analyzer, Metric] = {}
 
-    # 1. Preconditions (schema-only, no jobs).
+    # 1. Classify; FusedScan checks the fused analyzers' preconditions,
+    #    the rest are checked here (schema-only, no jobs).
     schema = data.schema
-    passed: List[Analyzer] = []
-    for a in todo:
-        err = find_first_failing(schema, a.preconditions())
-        if err is not None:
-            metrics[a] = a.to_failure_metric(err)
-        else:
-            passed.append(a)
-
     scan: List[ScanShareableAnalyzer] = []
     quantiles: List[Quantile] = []
     grouping: List[FrequencyBasedAnalyzer] = []
     others: List[Analyzer] = []
-    for a in passed:
+    for a in todo:
         if isinstance(a, Quantile):
             quantiles.append(a)
-        elif isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan:
+        elif fusable(a):
             scan.append(a)
-        elif isinstance(a, FrequencyBasedAnalyzer):
-            grouping.append(a)
         else:
-            others.append(a)
+            err = find_first_failing(schema, a.preconditions())
+            if err is not None:
+                metrics[a] = a.to_failure_metric(err)
+            elif isinstance(a, FrequencyBasedAnalyzer):
+                grouping.append(a)
+            else:
+                others.append(a)
 
-    # 2. Fused single-scan aggregation (over shared derived columns —
-    #    expensive per-row classifications evaluated once, see
-    #    ScanShareableAnalyzer.projection_cols).
-    agg_input = apply_projections(data, scan)
-    fused: List[Tuple[Analyzer, int, int]] = []  # (analyzer, start, end)
-    exprs = []
-    for a in scan:
-        try:
-            ae = a.cached_aggregation_exprs(agg_input)
-        except Exception as e:  # unresolvable expression -> Failure
-            metrics[a] = a.to_failure_metric(e)
-            continue
-        fused.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    q_offsets: List[Tuple[Quantile, int]] = []
-    for q in quantiles:
-        try:
-            qe = q.phase1_exprs(data)
-        except Exception as e:
-            metrics[q] = q.to_failure_metric(e)
-            continue
-        q_offsets.append((q, len(exprs)))
-        exprs.extend(qe)
+    # 2. ONE fused single-scan aggregation: every scan-shareable
+    #    analyzer plus the phase-1 counts of exact quantiles.
+    counts = {q: _QuantileCount(q) for q in quantiles}
+    states, errors = FusedScan(data, scan + list(counts.values())).run()
+    metrics.update(metrics_from(scan, states, errors))
 
-    if exprs:
-        # no aliases: the row is consumed positionally, and each
-        # .alias() is a py4j round trip (54 exprs ~= 0.1s of driver
-        # time per fused run)
-        row = list(agg_input.agg(*exprs).first())
-        for a, start, end in fused:
-            try:
-                state = a.state_from_agg(row[start:end])
-                metrics[a] = a.compute_metric_from(state)
-            except Exception as e:  # noqa: BLE001
-                metrics[a] = a.to_failure_metric(e)
-
-        # 3. Exact quantiles: phase 2 (one more fused job).  Quantiles
-        #    sharing a (column, where) pair fuse into ONE
-        #    percentile(col, array(q1..qk)) — a single sort buffer per
-        #    group instead of one full-column buffer per quantile.
-        by_col: Dict[
-            Tuple[str, Optional[str]], List[Tuple[Quantile, int]]
-        ] = {}
-        for q, off in q_offsets:
-            n = int(row[off] or 0)
-            if n == 0:
-                try:
-                    metrics[q] = q.compute_metric_from(q.state_from_phases(0, None))
-                except Exception as e:  # noqa: BLE001
-                    metrics[q] = q.to_failure_metric(e)
-                continue
-            by_col.setdefault((q.instance, q.where), []).append((q, n))
-        groups = list(by_col.values())
-        if groups:
-            q_row = list(
-                data.agg(
-                    *(
-                        Quantile.fused_phase2_expr(data, g).alias(f"_q{i}")
-                        for i, g in enumerate(groups)
-                    )
-                ).first()
-            )
-            for g, values in zip(groups, q_row):
-                for j, (q, n) in enumerate(g):
-                    try:
-                        value = None if values is None else values[j]
-                        state = q.state_from_phases(n, value)
-                        metrics[q] = q.compute_metric_from(state)
-                    except Exception as e:  # noqa: BLE001
-                        metrics[q] = q.to_failure_metric(e)
+    # 3. Exact quantiles: phase 2 (one more fused job).  Quantiles
+    #    sharing a (column, where) pair fuse into ONE
+    #    percentile(col, array(q1..qk)) — a single sort buffer per
+    #    group instead of one full-column buffer per quantile.
+    q_states: Dict[Analyzer, object] = {}
+    q_errors: Dict[Analyzer, Exception] = {}
+    by_col: Dict[Tuple[str, Optional[str]], List[Tuple[Quantile, int]]] = {}
+    for q, c in counts.items():
+        if c in errors:
+            q_errors[q] = errors[c]
+        elif states[c] == 0:
+            q_states[q] = q.state_from_phases(0, None)
+        else:
+            by_col.setdefault((q.instance, q.where), []).append((q, states[c]))
+    groups = list(by_col.values())
+    if groups:
+        q_row = data.agg(
+            *(Quantile.fused_phase2_expr(data, g) for g in groups)
+        ).first()
+        for g, values in zip(groups, q_row):
+            for j, (q, n) in enumerate(g):
+                q_states[q] = q.state_from_phases(
+                    n, None if values is None else values[j]
+                )
+    metrics.update(metrics_from(quantiles, q_states, q_errors))
 
     # 4. Grouping analyzers: one groupBy job per (columns, where) pair,
     #    shared across all frequency-based analyzers on that pair.

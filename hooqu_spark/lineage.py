@@ -6,9 +6,9 @@ signature but stubbed (``aggregate_with``/``save_states_with`` hooks,
 ``hooqu/analyzers/analyzer.py:80-130``; ``verification_suite.py:121-122``):
 
 * ``compute_partition_states`` — ONE ``groupBy(partition_col).agg``
-  job evaluating every scan-shareable analyzer's aggregate expressions
-  per partition bucket; each bucket row becomes serialized monoid
-  states.
+  job (``FusedScan``) evaluating every scan-shareable analyzer's
+  aggregate expressions per partition bucket; each bucket row becomes
+  serialized monoid states.
 * ``merge_states`` — driver-side monoid fold across buckets; by
   construction ``metric(merge(states)) == metric(whole table)`` for
   sum/count/min/max/mean/stddev(Chan) states.
@@ -26,12 +26,18 @@ import json
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .analyzers.base import Analyzer, ScanShareableAnalyzer, apply_projections
+from .analyzers.base import (
+    Analyzer,
+    FusedScan,
+    ScanShareableAnalyzer,
+    merge_state,
+    metrics_from,
+)
 from .metrics import DoubleMetric
 from .states import State, state_from_dict
 
@@ -58,38 +64,35 @@ def compute_partition_states(
 ) -> List[StateRecord]:
     """One groupBy job -> per-bucket states for all analyzers.
 
+    A commit path: an analyzer that fails its preconditions (or whose
+    expression does not resolve) raises its own error here, before any
+    job runs, instead of committing empty states.  A state that cannot
+    be built from one bucket's slice (e.g. stddev over an all-NULL
+    bucket) is committed as "null", the monoid identity.
+
     Bucket ids are stored as SPARK-cast strings (grouping on
     ``cast(partition_col as string)``), so the commit-log markers use
     the same stringification the resume/idempotence filters apply
     executor-side — a Python ``str()`` would disagree for e.g. boolean
     buckets ('True' vs 'true') and silently break retry skipping."""
+    scan = FusedScan(df, analyzers)
+    for err in scan.errors.values():
+        raise err
+    records: List[StateRecord] = []
+    for bucket, *values in _by_bucket(scan, partition_col).collect():
+        states, _ = scan.states(values)
+        for a in scan.analyzers:
+            state = states.get(a)
+            payload = "null" if state is None else json.dumps(state.to_dict())
+            records.append(StateRecord(str(bucket), analyzer_key(a), payload))
+    return records
+
+
+def _by_bucket(scan: FusedScan, col: str) -> DataFrame:
+    """The grouped fused aggregation, keyed on the Spark-cast string."""
     from pyspark.sql import functions as F
 
-    df = apply_projections(df, analyzers)
-    slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
-    exprs = []
-    for a in analyzers:
-        ae = a.cached_aggregation_exprs(df)
-        slices.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    rows = (
-        df.groupBy(F.col(partition_col).cast("string").alias(partition_col))
-        .agg(*(e.alias(f"_s{i}") for i, e in enumerate(exprs)))
-        .collect()
-    )
-    records: List[StateRecord] = []
-    for row in rows:
-        values = list(row)
-        bucket = str(values[0])
-        body = values[1:]
-        for a, start, end in slices:
-            try:
-                state = a.state_from_agg(body[start:end])
-                payload = json.dumps(state.to_dict()) if state else "null"
-            except Exception:  # e.g. stddev with n=0 in an empty bucket
-                payload = "null"
-            records.append(StateRecord(bucket, analyzer_key(a), payload))
-    return records
+    return scan.agg(F.col(col).cast("string").alias(col))
 
 
 def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
@@ -101,11 +104,7 @@ def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
             if rec.state_json != "null"
             else None
         )
-        if rec.analyzer_key not in merged:
-            merged[rec.analyzer_key] = state
-        elif state is not None:
-            prev = merged[rec.analyzer_key]
-            merged[rec.analyzer_key] = state if prev is None else prev.sum(state)
+        merged[rec.analyzer_key] = merge_state(merged.get(rec.analyzer_key), state)
     return merged
 
 
@@ -113,14 +112,8 @@ def metrics_from_states(
     analyzers: Sequence[ScanShareableAnalyzer],
     merged: Dict[str, Optional[State]],
 ) -> Dict[Analyzer, DoubleMetric]:
-    out: Dict[Analyzer, DoubleMetric] = {}
-    for a in analyzers:
-        state = merged.get(analyzer_key(a))
-        try:
-            out[a] = a.compute_metric_from(state)
-        except Exception as e:  # noqa: BLE001
-            out[a] = a.to_failure_metric(e)
-    return out
+    states = {a: merged.get(analyzer_key(a)) for a in analyzers}
+    return metrics_from(analyzers, states, {})
 
 
 class StateRepository:
@@ -188,18 +181,16 @@ def metrics_by_group(
     ``groupBy(group_col).agg`` job (e.g. quality metrics per language
     over a webtext corpus).  Returns {group_value: {analyzer: metric}}.
 
-    Same machinery as per-bucket lineage states — the group's state row
+    Same fused scan as per-bucket lineage states — the group's state row
     IS a valid mergeable state, so per-group and whole-dataset metrics
-    stay consistent by construction."""
-    records = compute_partition_states(df, list(analyzers), group_col)
-    by_group: Dict[str, List[StateRecord]] = {}
-    for r in records:
-        by_group.setdefault(r.bucket, []).append(r)
-    out: Dict[str, Dict[Analyzer, DoubleMetric]] = {}
-    for group, recs in sorted(by_group.items()):
-        merged = merge_states(recs)
-        out[group] = metrics_from_states(analyzers, merged)
-    return out
+    stay consistent by construction.  Failures keep their cause, as in
+    the runner."""
+    scan = FusedScan(df, analyzers)
+    rows = sorted(_by_bucket(scan, group_col).collect(), key=lambda r: str(r[0]))
+    return {
+        str(group): metrics_from(analyzers, *scan.states(values))
+        for group, *values in rows
+    }
 
 
 def incremental_metrics(

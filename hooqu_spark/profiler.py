@@ -41,8 +41,8 @@ from .analyzers import (
 )
 from .analyzers.base import (
     Analyzer,
+    FusedScan,
     ScanShareableAnalyzer,
-    apply_projections,
     sql_ident as _ident,
     sql_str_lit as _slit,
 )
@@ -151,23 +151,9 @@ def profile_columns(
     # pass 1: ONE fused df.agg evaluating every analyzer's aggregate
     # expressions — including the DataTypeHistogram bucket counts, which
     # used to run as a second full-scan job because do_analysis_run only
-    # surfaces metrics; here we slice the fused row into per-analyzer
-    # STATES directly (same mechanism as the lineage runner).
-    agg_input = apply_projections(df, analyzers)
-    slices: List[tuple] = []
-    exprs: List = []
-    for a in analyzers:
-        ae = a.cached_aggregation_exprs(agg_input)
-        slices.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    # positional consumption -> no .alias() py4j round trips
-    row = list(agg_input.agg(*exprs).first())
-    states: Dict[Analyzer, object] = {}
-    for a, start, end in slices:
-        try:
-            states[a] = a.state_from_agg(row[start:end])
-        except Exception:  # e.g. stddev over an all-null column
-            states[a] = None
+    # surfaces metrics; here FusedScan slices the fused row into
+    # per-analyzer STATES directly.
+    states, _ = FusedScan(df, analyzers).run()
 
     def _state_value(analyzer: Analyzer) -> Optional[float]:
         state = states.get(analyzer)

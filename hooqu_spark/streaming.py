@@ -8,9 +8,11 @@ fused-scan state vector; the accumulator folds batches with the same
 merge ops the lineage layer uses, so cumulative metrics after N batches
 equal the metrics of the concatenated data — without reprocessing.
 
-Only scan-shareable analyzers participate (grouping analyzers would
-need their frequency tables persisted per batch — use the batch
-pipeline's lineage path for those).
+Only analyzers that fuse into one scan participate; ``check_fusable``
+rejects the rest up front (exact ``Quantile`` and ``CustomSql`` with
+``where`` need a second pass or a pre-filtered frame; grouping
+analyzers would need their frequency tables persisted per batch — use
+the batch pipeline's lineage path for those).
 
 Usage::
 
@@ -24,14 +26,20 @@ Usage::
 from __future__ import annotations
 
 import threading
-from typing import Callable, Dict, List, Optional, Sequence
+from typing import Callable, Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
-from .analyzers.base import Analyzer, ScanShareableAnalyzer, apply_projections
+from .analyzers.base import (
+    Analyzer,
+    FusedScan,
+    ScanShareableAnalyzer,
+    check_fusable,
+    merge_state,
+    metrics_from,
+)
 from .analyzers.runner import AnalyzerContext
 from .checks import Check
-from .lineage import analyzer_key
 from .metrics import DoubleMetric
 from .states import State
 from .verification_suite import VerificationResult, VerificationSuite
@@ -44,58 +52,28 @@ class StreamingVerification:
         checks: Sequence[Check] = (),
         on_batch: Optional[Callable[[int, VerificationResult], None]] = None,
     ):
-        for a in analyzers:
-            if not isinstance(a, ScanShareableAnalyzer):
-                raise TypeError(
-                    f"streaming verification requires scan-shareable "
-                    f"analyzers, got {a!r}"
-                )
+        check_fusable(analyzers)
         self.analyzers = list(analyzers)
         self.checks = list(checks)
         self.on_batch = on_batch
         self._lock = threading.Lock()
-        self._states: Dict[str, Optional[State]] = {}
+        self._states: Dict[Analyzer, Optional[State]] = {}
+        self._errors: Dict[Analyzer, Exception] = {}
         self._batches = 0
         self.last_result: Optional[VerificationResult] = None
 
     # -- state folding -------------------------------------------------------
     def _fold_batch(self, batch_df: DataFrame) -> None:
-        batch_df = apply_projections(batch_df, self.analyzers)
-        slices = []
-        exprs = []
-        for a in self.analyzers:
-            ae = a.cached_aggregation_exprs(batch_df)
-            slices.append((a, len(exprs), len(exprs) + len(ae)))
-            exprs.extend(ae)
-        row = list(
-            batch_df.agg(
-                *(e.alias(f"_b{i}") for i, e in enumerate(exprs))
-            ).first()
-        )
+        states, errors = FusedScan(batch_df, self.analyzers).run()
         with self._lock:
-            for a, start, end in slices:
-                key = analyzer_key(a)
-                try:
-                    state = a.state_from_agg(row[start:end])
-                except Exception:
-                    state = None
-                prev = self._states.get(key)
-                if prev is None:
-                    self._states[key] = state
-                elif state is not None:
-                    self._states[key] = prev.sum(state)
+            for a, state in states.items():
+                self._states[a] = merge_state(self._states.get(a), state)
+            self._errors.update(errors)
             self._batches += 1
 
     def current_metrics(self) -> Dict[Analyzer, DoubleMetric]:
         with self._lock:
-            out: Dict[Analyzer, DoubleMetric] = {}
-            for a in self.analyzers:
-                state = self._states.get(analyzer_key(a))
-                try:
-                    out[a] = a.compute_metric_from(state)
-                except Exception as e:  # noqa: BLE001
-                    out[a] = a.to_failure_metric(e)
-            return out
+            return metrics_from(self.analyzers, self._states, self._errors)
 
     def batches_processed(self) -> int:
         with self._lock:
@@ -150,59 +128,36 @@ class WindowedMetrics:
         watermark_delay: str = "0 seconds",
         slide_duration: Optional[str] = None,
     ):
-        for a in analyzers:
-            if not isinstance(a, ScanShareableAnalyzer):
-                raise TypeError(
-                    f"windowed metrics require scan-shareable analyzers,"
-                    f" got {a!r}"
-                )
+        check_fusable(analyzers)
         self.analyzers = list(analyzers)
         self.ts_col = ts_col
         self.window_duration = window_duration
         self.watermark_delay = watermark_delay
         self.slide_duration = slide_duration
         self._lock = threading.Lock()
-        self._windows: Dict[tuple, Dict[str, Optional[State]]] = {}
+        self._windows: Dict[tuple, tuple] = {}  # -> (states, errors)
 
     def _aggregated(self, stream_df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
-        stream_df = apply_projections(stream_df, self.analyzers)
-        slices = []
-        exprs = []
-        for a in self.analyzers:
-            ae = a.cached_aggregation_exprs(stream_df)
-            slices.append((a, len(exprs), len(exprs) + len(ae)))
-            exprs.extend(ae)
-        self._slices = slices
         win = (
             F.window(self.ts_col, self.window_duration, self.slide_duration)
             if self.slide_duration
             else F.window(self.ts_col, self.window_duration)
         )
-        return (
-            stream_df.withWatermark(self.ts_col, self.watermark_delay)
-            .groupBy(win.alias("_w"))
-            .agg(*(e.alias(f"_w{i}") for i, e in enumerate(exprs)))
+        self._scan = FusedScan(
+            stream_df.withWatermark(self.ts_col, self.watermark_delay),
+            self.analyzers,
         )
+        return self._scan.agg(win.alias("_w"))
 
     def _upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.collect()
         with self._lock:
-            for row in rows:
-                key = (row["_w"]["start"], row["_w"]["end"])
-                body = list(row)[1:]
-                states: Dict[str, Optional[State]] = {}
-                for a, start, end in self._slices:
-                    try:
-                        states[analyzer_key(a)] = a.state_from_agg(
-                            body[start:end]
-                        )
-                    except Exception:  # e.g. empty-window stddev
-                        states[analyzer_key(a)] = None
+            for w, *values in rows:
                 # streaming state store already holds the cumulative
                 # aggregate -> an update REPLACES the window's states
-                self._windows[key] = states
+                self._windows[(w["start"], w["end"])] = self._scan.states(values)
 
     def attach(self, stream_df: DataFrame):
         """Return a DataStreamWriter (output mode ``update``) with
@@ -214,17 +169,10 @@ class WindowedMetrics:
 
     def window_metrics(self) -> Dict[tuple, Dict[Analyzer, DoubleMetric]]:
         with self._lock:
-            out: Dict[tuple, Dict[Analyzer, DoubleMetric]] = {}
-            for key, states in sorted(self._windows.items()):
-                per: Dict[Analyzer, DoubleMetric] = {}
-                for a in self.analyzers:
-                    state = states.get(analyzer_key(a))
-                    try:
-                        per[a] = a.compute_metric_from(state)
-                    except Exception as e:  # noqa: BLE001
-                        per[a] = a.to_failure_metric(e)
-                out[key] = per
-            return out
+            return {
+                key: metrics_from(self.analyzers, states, errors)
+                for key, (states, errors) in sorted(self._windows.items())
+            }
 
 
 def streaming_dedup(
@@ -341,19 +289,25 @@ def streaming_grouped_metrics(
         if idle_timeout_ms is not None and state.hasTimedOut:
             state.remove()  # evicted: no data arrived within the horizon
             return
-        acc = (
-            StandardDeviationState(*state.get) if state.exists else None
-        )
+        acc = None  # this batch's partials only
         for pdf in pdfs:
             vals = pd.to_numeric(pdf[value_col], errors="coerce").dropna()
             if not len(vals):
                 continue
             bavg = float(vals.mean())
             bm2 = float(((vals - bavg) ** 2).sum())
-            part = StandardDeviationState(float(len(vals)), bavg, bm2)
-            acc = part if acc is None else acc.sum(part)
-        if acc is None:  # nothing numeric arrived for this key
+            acc = merge_state(
+                acc, StandardDeviationState(float(len(vals)), bavg, bm2)
+            )
+        if acc is None:
+            # nothing numeric arrived: no update, no row.  With neither
+            # update() nor setTimeoutDuration() the stored row is not
+            # rewritten, so Spark keeps its deadline from the last real
+            # update and the key is still evicted
+            # (test_idle_timeout_survives_null_only_batch)
             return
+        if state.exists:
+            acc = StandardDeviationState(*state.get).sum(acc)
         state.update((acc.n, acc.avg, acc.m2))
         if idle_timeout_ms is not None:
             state.setTimeoutDuration(idle_timeout_ms)

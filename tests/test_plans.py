@@ -35,7 +35,7 @@ def documents(spark):
 class TestFusedAggregatePlan:
     def test_one_scan_one_exchange_column_pruned(self, lineitem):
         from hooqu_spark.analyzers import Mean, Minimum, Size, Sum
-        from hooqu_spark.analyzers.base import apply_projections
+        from hooqu_spark.analyzers.base import FusedScan
 
         analyzers = [
             Size(),
@@ -44,12 +44,7 @@ class TestFusedAggregatePlan:
             Mean("l_extendedprice"),
             Minimum("l_quantity", where="l_linenumber > 1"),
         ]
-        agg_input = apply_projections(lineitem, analyzers)
-        exprs = []
-        for a in analyzers:
-            exprs.extend(a.aggregation_exprs(agg_input))
-        job = agg_input.agg(*(e.alias(f"_x{i}") for i, e in enumerate(exprs)))
-        p = plan_str(job)
+        p = plan_str(FusedScan(lineitem, analyzers).agg())
         assert p.count("Scan parquet") == 1  # every analyzer shares ONE scan
         assert p.count("Exchange") == 1      # single aggregate-buffer exchange
         # column pruning: only the three referenced columns are read
@@ -65,20 +60,31 @@ class TestFusedAggregatePlan:
     ):
         # two differently-filtered Minimums still = one scan
         from hooqu_spark.analyzers import Minimum
-        from hooqu_spark.analyzers.base import apply_projections
+        from hooqu_spark.analyzers.base import FusedScan
 
         analyzers = [
             Minimum("l_quantity"),
             Minimum("l_quantity", where="l_returnflag == 'A'"),
         ]
-        agg_input = apply_projections(lineitem, analyzers)
-        exprs = []
-        for a in analyzers:
-            exprs.extend(a.aggregation_exprs(agg_input))
-        p = plan_str(
-            agg_input.agg(*(e.alias(f"_x{i}") for i, e in enumerate(exprs)))
-        )
+        p = plan_str(FusedScan(lineitem, analyzers).agg())
         assert p.count("Scan parquet") == 1
+
+    def test_grouped_lineage_states_one_scan_one_exchange(self, lineitem):
+        # the per-bucket form compute_partition_states collects: every
+        # analyzer's states for every bucket from ONE scan + ONE shuffle
+        from hooqu_spark.analyzers import DataTypeHistogram, Mean, Size, Sum
+        from hooqu_spark.analyzers.base import FusedScan
+        from hooqu_spark.lineage import _by_bucket
+
+        analyzers = [
+            Size(),
+            Sum("l_quantity"),
+            Mean("l_extendedprice", where="l_linenumber > 1"),
+            DataTypeHistogram("l_comment"),
+        ]
+        p = plan_str(_by_bucket(FusedScan(lineitem, analyzers), "l_returnflag"))
+        assert p.count("Scan parquet") == 1
+        assert p.count("Exchange") == 1
 
 
 class TestPushdownPlans:
@@ -240,7 +246,7 @@ class TestPlansSurviveAQE:
 
     def test_fused_agg_still_one_scan_under_aqe(self, aqe, lineitem):
         from hooqu_spark.analyzers import Mean, Minimum, Size, Sum
-        from hooqu_spark.analyzers.base import apply_projections
+        from hooqu_spark.analyzers.base import FusedScan
 
         analyzers = [
             Size(),
@@ -248,14 +254,7 @@ class TestPlansSurviveAQE:
             Sum("l_quantity"),
             Mean("l_extendedprice"),
         ]
-        agg_input = apply_projections(lineitem, analyzers)
-        exprs = []
-        for a in analyzers:
-            exprs.extend(a.aggregation_exprs(agg_input))
-        job = agg_input.agg(
-            *(e.alias(f"_x{i}") for i, e in enumerate(exprs))
-        )
-        p = self.final_plan(job)
+        p = self.final_plan(FusedScan(lineitem, analyzers).agg())
         assert "isFinalPlan=true" in p
         assert p.count("Scan parquet") == 1
         # AQE must not introduce extra shuffles into the fused aggregate

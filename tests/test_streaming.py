@@ -477,6 +477,46 @@ class TestStreamingGroupedMetrics:
         (row,) = emitted
         assert (row["n"], row["mean"], row["stddev"]) == (1, 1.0, 0.0)
 
+    def test_null_only_batch_emits_no_row(self, spark, tmp_path):
+        """A key whose micro-batch carries only NULL / non-numeric
+        values is not updated: no re-emitted row (and so no refreshed
+        idle timeout) — only batches with numeric values emit."""
+        from hooqu_spark.streaming import streaming_grouped_metrics
+
+        src = str(tmp_path / "gm_nullbatch_src")
+        ckpt = str(tmp_path / "gm_nullbatch_ckpt")
+        schema = "k string, v double"
+        for rows in ([("a", 1.0)], [("a", None), ("b", 2.0)]):
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+
+        emitted = []
+
+        def sink(bdf, bid):
+            emitted.append((bid, bdf.collect()))
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            streaming_grouped_metrics(stream, "k", "v")
+            .writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+        batches = [
+            sorted(r["k"] for r in rows) for _, rows in sorted(emitted) if rows
+        ]
+        # batch 2 reaches key 'a' with a NULL only: 'a' is not re-emitted
+        assert batches == [["a"], ["b"]]
+
     def test_idle_timeout_evicts_state(self, spark, tmp_path):
         """With a processing-time idle timeout, a key that stays quiet
         for a batch is evicted and a later arrival restarts from zero —
@@ -535,3 +575,52 @@ class TestStreamingGroupedMetrics:
         # proving the idle eviction removed the first triple
         final = a_rows[-1][1]
         assert (final["n"], final["mean"]) == (1, 5.0)
+
+    def test_idle_timeout_survives_null_only_batch(self, spark, tmp_path):
+        """A NULL-only batch for a key with state keeps the key's idle
+        deadline: the key is still evicted once it goes quiet, so a
+        later arrival restarts from zero."""
+        from hooqu_spark.streaming import streaming_grouped_metrics
+
+        src = str(tmp_path / "gm_evict_null_src")
+        ckpt = str(tmp_path / "gm_evict_null_ckpt")
+        schema = "k string, v double"
+        # 'a' gets data, then a NULL only, idles, then reappears
+        for rows in (
+            [("a", 1.0)], [("a", None)], [("b", 2.0)], [("a", 5.0)]
+        ):
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+
+        emitted = []
+
+        def sink(bdf, bid):
+            emitted.append((bid, bdf.collect()))
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            streaming_grouped_metrics(stream, "k", "v", idle_timeout_ms=1)
+            .writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+        def a_rows():
+            return [r for _, rows in emitted for r in rows if r["k"] == "a"]
+
+        deadline = time.time() + 90
+        while time.time() < deadline and len(a_rows()) < 2:
+            time.sleep(0.5)
+        q.stop()
+        q.awaitTermination(30)
+
+        rows = a_rows()
+        assert len(rows) == 2
+        assert (rows[-1]["n"], rows[-1]["mean"]) == (1, 5.0)
